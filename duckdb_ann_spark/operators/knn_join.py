@@ -194,8 +194,8 @@ def _broadcast_scored_topk(
     What this removes vs the cogroup: the query-side explosion (every
     query vector ×nprobe through the exchange), the balls-in-bins task
     imbalance of hashing cells into shuffle partitions, and — via the
-    in-task cross-cell merge, the `_hits_batch` discipline — most of
-    the candidate rows entering the window exchange.
+    in-task cross-cell merge — most of the candidate rows entering the
+    window exchange.
 
     Correctness does not depend on the placement: the per-cell cut
     keeps every candidate with d <= the k-th smallest per query (ties
@@ -279,9 +279,9 @@ def _broadcast_scored_topk(
         bx = np.concatenate(acc_b)
         dx = np.concatenate(acc_d).astype(np.float64)
         if len(qx) > k:
-            # cross-cell tie-keep merge per query (the `_hits_batch`
-            # discipline): only ~k rows per query can survive the
-            # downstream window, so don't ship nprobe×k per query
+            # cross-cell tie-keep merge per query: only ~k rows per
+            # query can survive the downstream window, so don't ship
+            # nprobe×k per query
             order = np.lexsort((bx, dx, qx))
             qx, bx, dx = qx[order], bx[order], dx[order]
             starts = np.flatnonzero(np.r_[True, qx[1:] != qx[:-1]])

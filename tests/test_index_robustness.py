@@ -271,32 +271,6 @@ def test_overrequest_retry_on_routed_graph(spark, cat):
     drop_index(name, cat)
 
 
-def test_resolve_labels_spark_fallback(spark, cat, monkeypatch):
-    """_resolve_labels' Spark isin-filter fallback returns the same map
-    as the pyarrow path when pyarrow can't open the scheme."""
-    import duckdb_ann_spark.index.vamana as vm
-
-    name = "rob_labels"
-    drop_index(name, cat)
-    create_index(_vecs(spark, range(40)), "vec_id", "embedding", name,
-                 engine="diskann", table_name="t", catalog=cat)
-    d = cat.path(name)
-    pairs = {(0, 3), (0, 17), (0, 39)}
-    want = vm._resolve_labels(spark, d, pairs)
-    assert set(want) == pairs  # single shard: label == insertion order
-
-    import pyarrow.dataset as pads
-
-    def boom(*a, **kw):
-        raise OSError("scheme not supported")
-
-    monkeypatch.setattr(pads, "dataset", boom)
-    got = vm._resolve_labels(spark, d, pairs)
-    assert got == want
-    assert vm._resolve_labels(spark, d, set()) == {}
-    drop_index(name, cat)
-
-
 def _raw_vecs(spark, n, dim=4):
     """The round-13 advice reproducer: array<double> vectors + INT ids —
     the dtypes a user frame most commonly arrives with. Every Arrow

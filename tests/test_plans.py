@@ -76,9 +76,12 @@ def test_distance_exprs_stay_in_codegen(spark, emb):
     assert "*(1)" in plan, plan
 
 
-def test_vamana_batch_search_broadcasts_hits(spark, sf_dir, tmp_path):
-    """The label-map join must broadcast the tiny hits side — the label
-    map scales with the index and has to stream."""
+def test_vamana_batch_search_plan_has_no_join_or_exchange(spark, sf_dir,
+                                                         tmp_path):
+    """The label map scales with the index, so it must never shuffle or
+    land on the driver. The batch search resolves ids inside the search
+    task instead: the plan is the query frame under one MapInArrow — no
+    Join of any kind and no Exchange."""
     from duckdb_ann_spark.index import Catalog, create_index, index_scan
 
     cat = Catalog(str(tmp_path / "plan_cat"))
@@ -89,8 +92,9 @@ def test_vamana_batch_search_broadcasts_hits(spark, sf_dir, tmp_path):
     )
     qs = [[0.0] * 64] * 16  # > DISTRIBUTE_THRESHOLD -> distributed path
     plan = _plan(index_scan(spark, "plan_vam", qs, 5, catalog=cat))
-    assert "BroadcastHashJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
+    assert "MapInArrow" in plan, plan
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
 
 
 def test_ivf_probe_scan_has_no_join(spark, sf_dir, tmp_path):

@@ -517,3 +517,183 @@ def test_cell_pack_identical_artifacts_and_gate(spark, cat, monkeypatch,
 
     for name in ("pack_off", "pack_on"):
         drop_index(name, cat)
+
+
+# -- one-job routed search: in-task id resolution and exact top-k cut ---
+
+GRAPH_ENGINES = [
+    ("diskann", dict(max_degree=16, build_complexity=32)),
+    ("faiss", dict(type="HNSW", hnsw_m=8)),
+]
+
+
+def _mirror_rows(n_half: int, seed: int):
+    """Two clusters at ±10 on axis 0, each point of one mirrored in the
+    other on that axis only. Any query with q[0] == 0 is exactly as far
+    from a point as from its mirror, so every result row ties with a
+    row of the other shard; ids are shuffled so the id tie-break picks
+    either side."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    a = rng.normal(0.0, 1.0, (n_half, 4)).astype(np.float32)
+    a[:, 0] += 10.0
+    b = a.copy()
+    b[:, 0] = -b[:, 0]
+    mat = np.vstack([a, b])
+    ids = rng.permutation(2 * n_half).astype(np.int64)
+    return mat, ids
+
+
+def _tie_queries(nq: int, seed: int):
+    import numpy as np
+
+    qs = np.random.default_rng(seed).normal(0.0, 1.0, (nq, 4))
+    qs = qs.astype(np.float32)
+    qs[:, 0] = 0.0
+    return qs
+
+
+def _oracle(mat, ids, qs, k):
+    """(id, distance) top-k per query by (distance, id), distances from
+    the engine's own row kernel."""
+    import numpy as np
+
+    from duckdb_ann_spark.index.vamana_core import _dists
+
+    out = []
+    for q in qs:
+        d = _dists("l2", mat, q)
+        o = np.lexsort((ids, d))[:k]
+        out.append([(int(ids[i]), float(d[i])) for i in o])
+    return out
+
+
+def _by_query(rows, nq, id_col="vec_id"):
+    got = [[] for _ in range(nq)]
+    for r in rows:
+        got[r["query_idx"]].append((r[id_col], r["_distance"]))
+    return [sorted(g, key=lambda t: (t[1], t[0])) for g in got]
+
+
+def _mirror_index(spark, cat, name, engine, opts, n_half=150, seed=5):
+    mat, ids = _mirror_rows(n_half, seed)
+    df = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(ids, mat)],
+        "vec_id long, embedding array<float>",
+    )
+    create_index(df, "vec_id", "embedding", name, engine=engine, shards=2,
+                 shard_by="cells", route_nprobe=2, catalog=cat, **opts)
+    assert cat.load(name)["shards"] == 2
+    return mat, ids
+
+
+@pytest.mark.parametrize("engine,opts", GRAPH_ENGINES)
+def test_routed_scan_is_one_spark_job(spark, cat, engine, opts):
+    """A 16-query routed index_scan, planning and collect included, runs
+    exactly one Spark job: one narrow mapInArrow over the query frame,
+    with no label-map read, no exchange and no join."""
+    _mirror_index(spark, cat, "onejob", engine, opts)
+    qs = _tie_queries(16, 1)
+    sc = spark.sparkContext
+    group = f"one_job_{engine}"
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        rows = index_scan(spark, "onejob", qs, k=5, catalog=cat).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 16 * 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    drop_index("onejob", cat)
+
+
+@pytest.mark.parametrize("engine,opts", GRAPH_ENGINES)
+def test_routed_cross_shard_ties_break_on_id(spark, cat, engine, opts):
+    """Mirrored points tie exactly across the two shards, so the id
+    tie-break decides the k-th row of every query. Exhaustive search
+    over both shards must equal the numpy (distance, id) oracle, rows
+    and distances, on the executor path (16 queries) and on the
+    few-query driver path (4 queries)."""
+    mat, ids = _mirror_index(spark, cat, "ties", engine, opts)
+    k = 5
+    for nq in (16, 4):
+        qs = _tie_queries(nq, 2)
+        rows = index_scan(spark, "ties", qs, k, search_complexity=len(ids),
+                          catalog=cat).collect()
+        assert _by_query(rows, nq) == _oracle(mat, ids, qs, k), nq
+    drop_index("ties", cat)
+
+
+@pytest.mark.parametrize("engine,opts", GRAPH_ENGINES)
+def test_routed_id_cache_follows_insert_and_vacuum(spark, cat, engine,
+                                                   opts):
+    """The per-shard id arrays cached in the Python workers must follow
+    the label map: in one warm session, scan → insert → scan → delete +
+    vacuum → scan, every scan equals the exact oracle over the live rows
+    (exhaustive search, every shard probed). A stale cache would drop
+    the inserted ids or resurrect the vacuumed ones."""
+    import numpy as np
+
+    from duckdb_ann_spark.index import delete_from_index
+
+    mat, ids = _mirror_index(spark, cat, "churnids", engine, opts)
+    rng = np.random.default_rng(3)
+    new = mat[rng.choice(len(mat), 12, replace=False)] + rng.normal(
+        0.0, 0.1, (12, 4)).astype(np.float32)
+    new_ids = np.arange(10_000_000, 10_000_012, dtype=np.int64)
+    # queries: the 12 new vectors plus 4 old ones — the executor path
+    qs = np.vstack([new, mat[:4]]).astype(np.float32)
+    k, L = 4, 10 * len(mat)
+
+    def check(live_mat, live_ids):
+        rows = index_scan(spark, "churnids", qs, k, search_complexity=L,
+                          catalog=cat).collect()
+        assert _by_query(rows, len(qs)) == _oracle(live_mat, live_ids,
+                                                   qs, k)
+        return {r["vec_id"] for r in rows}
+
+    assert not check(mat, ids) & set(new_ids.tolist())
+    insert_into_index(spark, "churnids", spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in zip(new_ids, new)],
+        "vec_id long, embedding array<float>",
+    ), cat)
+    mat2, ids2 = np.vstack([mat, new]), np.concatenate([ids, new_ids])
+    assert set(new_ids.tolist()) <= check(mat2, ids2)
+    gone = [int(i) for i in new_ids[:6]] + [int(ids[0]), int(ids[1])]
+    delete_from_index(spark, "churnids", gone, catalog=cat)
+    vacuum_index(spark, "churnids", cat)
+    keep = ~np.isin(ids2, gone)
+    got = check(mat2[keep], ids2[keep])
+    assert not got & set(gone)
+    assert set(new_ids[6:].tolist()) <= got
+    drop_index("churnids", cat)
+
+
+@pytest.mark.parametrize("engine,opts", GRAPH_ENGINES)
+def test_routed_id_cache_follows_label_map_rewrite(spark, cat, engine,
+                                                   opts):
+    """A label-map change that leaves every shard file untouched must
+    still reach the warm workers' id arrays: rewrite the map with every
+    id shifted, and the next scan returns the shifted ids."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    _mirror_index(spark, cat, "relabel", engine, opts)
+    qs = _tie_queries(16, 4)
+
+    def ids_per_query():
+        rows = index_scan(spark, "relabel", qs, 5, catalog=cat).collect()
+        return sorted((r["query_idx"], r["vec_id"]) for r in rows)
+
+    before = ids_per_query()
+    d = os.path.join(cat.path("relabel"), "labels")
+    tbl = pq.read_table(d)
+    tbl = tbl.set_column(tbl.schema.get_field_index("id"), "id",
+                         pc.add(tbl["id"], 1_000_000))
+    shutil.rmtree(d)
+    os.makedirs(d)
+    pq.write_table(tbl, os.path.join(d, "part-relabel.parquet"))
+    assert ids_per_query() == [(q, i + 1_000_000) for q, i in before]
+    drop_index("relabel", cat)
