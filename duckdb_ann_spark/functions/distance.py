@@ -69,7 +69,7 @@ def cast_id_vec(df, id_col: str, vec_col: str):
     `<id> long, <vec> array<float>` (column order preserved, other
     columns dropped).
 
-    mapInArrow/applyInArrow hand RecordBatches to the JVM under the
+    mapInArrow hands RecordBatches to the JVM under the
     DECLARED schema with NO coercion — unlike mapInPandas, which
     converts. A user frame with `array<double>` vectors or int32 ids
     passed verbatim into a declared `array<float>`/`long` output column
@@ -398,24 +398,22 @@ def np_partial_topk(d: np.ndarray, ids: np.ndarray, kk: int) -> np.ndarray:
 
 
 def np_topk_frame(dists, ids, qidx_values, kk: int, id_col: str,
-                  dist_col: str = "_distance", qidx_col: str = "query_idx",
-                  qidx_dtype=np.int32):
+                  dist_col: str = "_distance"):
     """Assemble the tie-safe per-batch partial top-k of a (nq, n)
     distance matrix into a pandas frame (query_idx, id, distance) — the
     one shared implementation of the cut-and-stack loop every batch
-    scorer needs (ivf probe, brute-force batch, cell-cogrouped k-NN
-    join, which passes its long query-id column via qidx_col/dtype)."""
+    scorer needs (ivf probe, brute-force batch)."""
     import pandas as pd
 
     qs_out, ids_out, d_out = [], [], []
     for r, qv in enumerate(qidx_values):
         top = np_partial_topk(dists[r], ids, kk)
-        qs_out.append(np.full(len(top), qv, dtype=qidx_dtype))
+        qs_out.append(np.full(len(top), qv, dtype=np.int32))
         ids_out.append(ids[top])
         d_out.append(dists[r][top])
     return pd.DataFrame(
         {
-            qidx_col: np.concatenate(qs_out),
+            "query_idx": np.concatenate(qs_out),
             # int64, unconditionally: every consumer declares the id
             # column `long`, and the Arrow-pass consumers
             # (RecordBatch/Table.from_pandas) do NOT coerce — an int32

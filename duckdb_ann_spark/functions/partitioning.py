@@ -67,3 +67,42 @@ def exact_partition_tokens(n: int) -> np.ndarray:
             found += 1
         t += 1
     return tokens
+
+
+def lpt_bins(mass: np.ndarray, n_bins: int) -> np.ndarray:
+    """LPT pack: heaviest item first into the lightest bin → bin_of
+    (len(mass),). Ties break on the lower index (stable heaviest-first
+    order) and the lower bin. Every item gets at least unit mass, so
+    zero-estimate items round-robin across bins instead of piling into
+    bin 0 (a (0.0, 0) push would keep bin 0 the heap minimum)."""
+    import heapq
+
+    mass = np.maximum(np.asarray(mass, dtype=np.float64), 1.0)
+    order = np.argsort(-mass, kind="stable")
+    heap = [(0.0, b) for b in range(n_bins)]
+    bin_of = np.empty(len(mass), dtype=np.int64)
+    for c in order.tolist():
+        load, b = heapq.heappop(heap)
+        bin_of[c] = b
+        heapq.heappush(heap, (load + float(mass[c]), b))
+    return bin_of
+
+
+def mix64_np(x: np.ndarray) -> np.ndarray:
+    """splitmix64 finalizer over a uint64 array — bit-identical per
+    element to the scalar `index.vamana_core._mix64` (numpy uint64
+    arithmetic wraps mod 2^64 exactly like the masked python version).
+    Sub-shard and sub-cell placement hash ids with it, so placement is
+    deterministic across environments."""
+    z = (x + np.uint64(0x9E3779B97F4A7C15))
+    z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
+    z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
+    return z ^ (z >> np.uint64(31))
+
+
+def unit_tokens(tokens: np.ndarray, salt: int, cells: np.ndarray,
+                ids: np.ndarray) -> np.ndarray:
+    """Per-row placement token tokens[cell·salt + sub] of a cell split
+    into `salt` units, sub = mix64_np(id) mod salt."""
+    sub = mix64_np(ids.astype(np.uint64)) % np.uint64(salt)
+    return tokens[cells.astype(np.int64) * salt + sub.astype(np.int64)]

@@ -476,7 +476,7 @@ def index_search_table(
       cache); shard_by='cells' routing happens inside the task off a
       broadcast centroid matrix.
     * IVFFlat: `index_knn_join` (cell-partitioned parquet reused,
-      query side assigned + cogroup-GEMM scored).
+      query side broadcast, cells GEMM-scored).
     * Flat: exact k-NN join against the index's vector table.
 
     Queries whose vector length mismatches the index dimension are

@@ -63,10 +63,10 @@ from .hnsw_core import build_hnsw
 from .vamana_core import (
     SQ8Vectors,
     VamanaGraph,
-    _mix64_np,
     build_graph,
     sq8_quantize,
 )
+from ..functions.partitioning import mix64_np
 from ..functions.text import quote_ident as _quote
 
 GRAPH_DIR = "graph"
@@ -723,7 +723,7 @@ class VamanaEngine:
         _phase("routing-kmeans")
         k_eff = centroids.shape[0]
         from ..functions.distance import np_index_distances
-        from ..functions.partitioning import exact_partition_tokens
+        from ..functions.partitioning import exact_partition_tokens, lpt_bins
 
         # Cell-size guard (round 15): k-means does NOT guarantee
         # balanced cells — on uniform HIGH-DIM data it collapses
@@ -827,25 +827,13 @@ class VamanaEngine:
         else:
             n_bins = total_shards
         if n_bins < total_shards:
-            import heapq
-
             if est is not None:
                 est_shard = np.repeat(est / n_sub, n_sub)
             else:
                 est_shard = np.ones(total_shards, dtype=np.float64)
-            # unit-mass floor (r15 ADVICE): zero-estimate cells (zero
-            # train-sample rows) would otherwise all pile into bin 0 —
-            # popping (0.0, 0) and pushing (0.0, 0) back keeps bin 0
-            # the heap minimum; with the floor they round-robin
-            est_shard = np.maximum(est_shard, 1.0)
-            heavy_first = np.argsort(-est_shard, kind="stable")
-            heap = [(0.0, b) for b in range(n_bins)]
-            bin_of = np.empty(total_shards, dtype=np.int64)
-            for s in heavy_first.tolist():
-                load, b = heapq.heappop(heap)
-                bin_of[s] = b
-                heapq.heappush(heap, (load + float(est_shard[s]), b))
-            tokens = exact_partition_tokens(n_bins)[bin_of]
+            tokens = exact_partition_tokens(n_bins)[
+                lpt_bins(est_shard, n_bins)
+            ]
             if _phases:
                 print(
                     f"[build-phase] cell-pack: {total_shards} shards -> "
@@ -905,7 +893,7 @@ class VamanaEngine:
                     .to_numpy(zero_copy_only=False)
                     .astype(np.uint64)
                 )
-                sub = _mix64_np(ids_np) % nsub[cells].astype(np.uint64)
+                sub = mix64_np(ids_np) % nsub[cells].astype(np.uint64)
                 sids = (offs[cells] + sub.astype(np.int64)).astype(np.int64)
                 out = pa.RecordBatch.from_arrays(
                     [

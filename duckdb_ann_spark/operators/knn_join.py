@@ -1,42 +1,43 @@
 """Distributed k-NN join: every row of a QUERY DataFrame gets its k
-nearest rows from a BASE DataFrame — no driver collect, no crossJoin.
+nearest rows from a BASE DataFrame — no crossJoin, and query vectors
+never enter an exchange.
 
 This is the operator shape the reference cannot express at scale: its
 `ann_search_table` (`/root/reference/src/ann_search.cpp:397-691`)
 streams the query table through one in-process index; here BOTH sides
 may be arbitrarily large DataFrames.
 
-Plan (IVF-style cell co-partitioning):
+Plan (IVF-style cells):
 
 1. train `nlist` centroids from a bounded, deterministic sample of the
    base side (driver numpy k-means — O(cap·dim) memory regardless of
    table size);
-2. one narrow pass assigns each base row to its nearest cell and each
-   query row to its `nprobe` nearest cells (queries explode ×nprobe);
+2. one narrow pass assigns each base row to its nearest cell;
 3. score within cells:
-   * fast path (default): COGROUP both sides on `cell`
-     (`applyInPandas`) — the only exchange moves each base row once and
-     each query row `nprobe` times; every cell scores as ONE
-     (|q_cell|, |b_cell|) BLAS GEMM + tie-safe partial top-k. Candidate
-     pairs are never materialized as rows.
-   * exact path (`method='exact'`): equi-join on `cell` + the JVM
-     sequential-fold distance — bit-exact vs the DuckDB LATERAL oracle
-     (this is the hash-compared driver entry at `nprobe >= nlist`).
+   * default: the query side is collected to the driver in chunks of at
+     most `QUERY_CHUNK_MB` of vectors (one chunk in the common case) and
+     each chunk's probe lists are computed there. Every chunk rides one
+     broadcast. The base side makes its one exchange into LPT-balanced
+     bins, and one narrow scoring pass per chunk reads that exchange and
+     scores every probed cell as one (|q_c|, |b_c|) BLAS GEMM + tie-safe
+     partial top-k. Candidate pairs are never materialized as rows.
+   * exact (`method='exact'`): queries explode ×nprobe and equi-join the
+     base on `cell`, scored by the JVM sequential-fold distance —
+     bit-exact vs the DuckDB LATERAL oracle (this is the hash-compared
+     driver entry at `nprobe >= nlist`).
 4. a per-query window merges cell-local top-k into the global top-k.
 
 `nprobe >= nlist` degenerates to the exact k-NN join (every pair
-scored). Cells are the unit of parallelism on the fast path — pick
-`nlist` at least the cluster parallelism so no task owns too much of
-the corpus, and `salt=s` to sub-split skewed cells (the one shuffle
-AQE's skew-join cannot touch) into s tasks each.
+scored). Cells are the unit of placement: pick `nlist` at least the
+cluster parallelism, and `salt=s` to split every probed cell's base
+rows over s scoring units when one cell is too hot for one task.
 """
 
 from __future__ import annotations
 
-import os
+from functools import reduce
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -44,44 +45,77 @@ from ..functions.distance import (
     index_distance,
     np_index_distances,
     np_stack_vectors,
-    np_topk_frame,
+)
+from ..functions.partitioning import (
+    exact_partition_tokens,
+    lpt_bins,
+    unit_tokens,
 )
 from ..index.ivf import _kmeans, auto_nlist, auto_nprobe
-from ..local import local_df
 
 DISTANCE_COL = "_distance"
 CELL_COL = "__cell"
 TOK_COL = "__tok"
 
-# Broadcast-queries scoring path (round 16, guide §8 "decide with small
-# rows, move big rows once" / §2.3 "shuffle keys, not payloads"): cap on
-# the query-side vector bytes collected to the driver. 0 disables the
-# path (every call takes the cogroup spelling).
-_BCAST_MB_ENV = "SPARK_GRAFT_KNN_BCAST_MB"
+# Cap on the query-side vector bytes the driver holds at once: the query
+# side is collected and broadcast in chunks of at most this size.
+QUERY_CHUNK_MB = 64
+# Hash buckets the query ids fall into when an over-cap query side is
+# split into chunks (a chunk is a run of consecutive buckets).
+_CHUNK_BUCKETS = 4096
 
 
-def _collect_queries_bounded(queries_df: DataFrame, query_id_col: str,
-                             query_vec_col: str, dim: int):
-    """Bounded collect of the query side for the broadcast scoring path
-    → (qids int64 (nq,), qmat f32 (nq, dim)) or None when the side
-    exceeds the byte cap / the cap is disabled / the side is empty.
-    The probe is one `limit(cap+1).toPandas()` — CollectLimit stops
-    early on a huge query side, so the fallback cost is bounded by the
-    cap, not the side's size."""
-    cap_mb = float(os.environ.get(_BCAST_MB_ENV, "") or 64)
-    if cap_mb <= 0:
-        return None
-    cap_rows = max(1, int(cap_mb * 1024 * 1024 // (4 * max(1, dim))))
-    pdf = (
-        queries_df.select(query_id_col, query_vec_col)
-        .limit(cap_rows + 1)
-        .toPandas()
+def _chunk_rows(dim: int) -> int:
+    return max(1, int(QUERY_CHUNK_MB * 1024 * 1024 // (4 * max(1, dim))))
+
+
+def _np_queries(pdf, query_id_col: str, query_vec_col: str):
+    return (
+        pdf[query_id_col].to_numpy().astype(np.int64, copy=False),
+        np_stack_vectors(pdf[query_vec_col]),
     )
-    if len(pdf) > cap_rows or len(pdf) == 0:
+
+
+def _probe_queries(q: DataFrame, query_id_col: str, query_vec_col: str,
+                   dim: int):
+    """Bounded first look at the query side → (qids int64 (nq,), qmat
+    f32 (nq, dim)) when it fits one chunk, else None. One
+    `limit(cap+1)` collect: CollectLimit stops early on a huge side, so
+    the probe never holds more than one chunk."""
+    cap = _chunk_rows(dim)
+    pdf = q.limit(cap + 1).toPandas()
+    if len(pdf) > cap:
         return None
-    qids = pdf[query_id_col].to_numpy().astype(np.int64, copy=False)
-    qmat = np_stack_vectors(pdf[query_vec_col])
-    return qids, qmat
+    return _np_queries(pdf, query_id_col, query_vec_col)
+
+
+def _query_chunks(q: DataFrame, query_id_col: str, query_vec_col: str,
+                  dim: int):
+    """Yield an over-cap query side as (qids, qmat) chunks of at most
+    `_chunk_rows(dim)` rows, one at a time. Rows fall into
+    `_CHUNK_BUCKETS` buckets by a hash of the query id; one aggregate
+    job counts the buckets, runs of consecutive buckets are packed into
+    chunks, and each chunk is one filtered collect. A bucket larger
+    than the cap on its own (duplicate query ids, or a side of more
+    than `_CHUNK_BUCKETS` chunks) becomes a chunk of its own."""
+    cap = _chunk_rows(dim)
+    bucket = F.pmod(F.hash(F.col(query_id_col)), F.lit(_CHUNK_BUCKETS))
+    counts = np.zeros(_CHUNK_BUCKETS, dtype=np.int64)
+    for r in q.groupBy(bucket.alias("b")).count().collect():
+        counts[r["b"]] = r["count"]
+    runs, lo, size = [], 0, 0
+    for b in range(_CHUNK_BUCKETS):
+        if size and size + counts[b] > cap:
+            runs.append((lo, b))
+            lo, size = b, 0
+        size += int(counts[b])
+    if size:
+        runs.append((lo, _CHUNK_BUCKETS))
+    for lo, hi in runs:
+        yield _np_queries(
+            q.where((bucket >= lo) & (bucket < hi)).toPandas(),
+            query_id_col, query_vec_col,
+        )
 
 
 def _driver_probe_csr(qmat: np.ndarray, centroids: np.ndarray, metric: str,
@@ -104,54 +138,65 @@ def _driver_probe_csr(qmat: np.ndarray, centroids: np.ndarray, metric: str,
     return grouped_q, bounds
 
 
-def _lpt_bins(mass: np.ndarray, n_bins: int) -> np.ndarray:
-    """LPT pack: heaviest cell first into the lightest bin → bin_of
-    (len(mass),). Every cell gets at least unit mass so zero-estimate
-    cells round-robin across bins instead of piling into bin 0 (the
-    r15 ADVICE straggler hazard on the vamana packer)."""
-    import heapq
+def _broadcast_queries(spark, q: DataFrame, query_id_col: str,
+                       query_vec_col: str, centroids: np.ndarray,
+                       metric: str, nprobe: int, first):
+    """Broadcast the query side chunk by chunk, each chunk with its
+    per-cell probe lists → (broadcasts, per-cell probe counts summed
+    over all chunks). `first` is `_probe_queries`' result: the whole
+    side when it fit one chunk, else None and the side is re-read in
+    chunks. The driver holds one chunk at a time — a broadcast value
+    lives in a file, not in driver memory."""
+    chunks = (
+        [first] if first is not None
+        else _query_chunks(q, query_id_col, query_vec_col,
+                           int(centroids.shape[1]))
+    )
+    bcs = []
+    q_counts = np.zeros(centroids.shape[0], dtype=np.int64)
+    for qids, qmat in chunks:
+        if not len(qids):
+            continue
+        grouped_q, bounds = _driver_probe_csr(qmat, centroids, metric, nprobe)
+        q_counts += np.diff(bounds)
+        bcs.append(
+            spark.sparkContext.broadcast((qids, qmat, grouped_q, bounds))
+        )
+        # release this chunk before the generator collects the next
+        del qids, qmat, grouped_q, bounds
+    return bcs, q_counts
 
-    mass = np.maximum(np.asarray(mass, dtype=np.float64), 1.0)
-    order = np.argsort(-mass, kind="stable")
-    heap = [(0.0, b) for b in range(n_bins)]
-    bin_of = np.empty(len(mass), dtype=np.int64)
-    for c in order.tolist():
-        load, b = heapq.heappop(heap)
-        bin_of[c] = b
-        heapq.heappush(heap, (load + float(mass[c]), b))
-    return bin_of
 
-
-def _cell_tokens(bounds: np.ndarray, est_b: np.ndarray | None,
-                 par: int) -> tuple[np.ndarray, int]:
-    """Placement tokens for the broadcast scoring path → (tokens
-    (n_cells,), n_bins). Cells probed by nobody get token -1 (their
-    base rows are pruned before the exchange — they cannot contribute a
-    candidate). Probed cells are LPT-packed by estimated GEMM mass
-    (|q_c| × est |b_c|) into `n_bins <= 2×parallelism` bins, each bin
-    placed in its own partition by a collision-free murmur3 token
-    (`functions.partitioning`) — the cogroup hashed ~nlist cells into
-    the shuffle partitions and lived with balls-in-bins collisions."""
-    from ..functions.partitioning import exact_partition_tokens
-
-    q_counts = np.diff(bounds).astype(np.float64)
-    probed = np.flatnonzero(q_counts > 0)
-    tokens = np.full(len(q_counts), -1, dtype=np.int64)
+def _cell_tokens(q_counts: np.ndarray, est_b: np.ndarray | None, par: int,
+                 salt: int = 1) -> tuple[np.ndarray, int]:
+    """Placement tokens for the scoring exchange → (tokens
+    (n_cells·salt,), n_bins). Unit u = cell·salt + sub holds the base
+    rows of `cell` whose `mix64_np(id) % salt == sub` (the Vamana
+    sub-shard mixer). Units of cells probed by nobody get token -1
+    (their base rows are pruned before the exchange — they cannot
+    contribute a candidate). Probed units are LPT-packed by estimated
+    GEMM mass (|q_c| × est |b_c| / salt) into `n_bins <= 2×parallelism`
+    bins, each bin placed in its own partition by a collision-free
+    murmur3 token (`functions.partitioning`)."""
+    q_counts = np.asarray(q_counts, dtype=np.float64)
+    mass = q_counts if est_b is None else q_counts * np.maximum(est_b, 1.0)
+    mass = np.repeat(mass / salt, salt)
+    probed = np.flatnonzero(np.repeat(q_counts > 0, salt))
+    tokens = np.full(len(mass), -1, dtype=np.int64)
     if len(probed) == 0:
         return tokens, 1
-    mass = q_counts[probed]
-    if est_b is not None:
-        mass = mass * np.maximum(est_b[probed], 1.0)
     n_bins = max(1, min(len(probed), 2 * par))
-    toks = exact_partition_tokens(n_bins)
-    tokens[probed] = toks[_lpt_bins(mass, n_bins)]
+    tokens[probed] = exact_partition_tokens(n_bins)[
+        lpt_bins(mass[probed], n_bins)
+    ]
     return tokens, n_bins
 
 
-def _with_tokens(df: DataFrame, tokens: np.ndarray) -> DataFrame:
-    """Append the per-cell placement token column (`TOK_COL` =
-    tokens[cell]) to a frame that already carries `CELL_COL` — one
-    vectorized narrow Arrow pass, no plan-bloating literal array."""
+def _with_tokens(df: DataFrame, id_col: str, tokens: np.ndarray,
+                 salt: int) -> DataFrame:
+    """Append the placement token column (`TOK_COL`, see `unit_tokens`)
+    to a frame that already carries `CELL_COL` — one vectorized narrow
+    Arrow pass, no plan-bloating literal array."""
     bc = df.sparkSession.sparkContext.broadcast(tokens)
     names = [f.name for f in df.schema.fields]
     types = {f.name: f.dataType.simpleString() for f in df.schema.fields}
@@ -164,51 +209,31 @@ def _with_tokens(df: DataFrame, tokens: np.ndarray) -> DataFrame:
             cell = b.column(
                 b.schema.get_field_index(CELL_COL)
             ).to_numpy(zero_copy_only=False)
+            ids = b.column(
+                b.schema.get_field_index(id_col)
+            ).to_numpy(zero_copy_only=False)
             yield b.append_column(
-                TOK_COL, pa.array(t[cell], type=pa.int64())
+                TOK_COL,
+                pa.array(unit_tokens(t, salt, cell, ids), type=pa.int64()),
             )
 
     schema = ", ".join(f"{c} {types[c]}" for c in names)
     return df.mapInArrow(add, schema=f"{schema}, {TOK_COL} long")
 
 
-def _broadcast_scored_topk(
-    b: DataFrame,
-    base_id_col: str,
-    base_vec_col: str,
-    query_id_col: str,
-    qids: np.ndarray,
-    qmat: np.ndarray,
-    grouped_q: np.ndarray,
-    bounds: np.ndarray,
-    metric: str,
-    k: int,
-    n_bins: int,
-) -> DataFrame:
-    """Scoring stage for a DRIVER-RESIDENT query side (guide §8
-    "decide with small rows, move the big rows once"): the query matrix
-    and its per-cell probe lists ride ONE broadcast; the base side —
-    already carrying cell + placement token columns — makes its one
-    exchange into `n_bins` LPT-balanced partitions and every cell is
-    scored by one (|q_c|, |b_c|) GEMM exactly as the cogroup scored it.
-    What this removes vs the cogroup: the query-side explosion (every
-    query vector ×nprobe through the exchange), the balls-in-bins task
-    imbalance of hashing cells into shuffle partitions, and — via the
-    in-task cross-cell merge — most of the candidate rows entering the
-    window exchange.
+def _scorer(bc, base_id_col: str, base_vec_col: str, query_id_col: str,
+            metric: str, k: int, dim: int):
+    """mapInArrow body scoring one broadcast query chunk against the
+    token-placed base rows of a task: per cell, one (|q_c|, |b_c|) GEMM
+    against the chunk's queries probing that cell, then a tie-keep cut.
 
     Correctness does not depend on the placement: the per-cell cut
     keeps every candidate with d <= the k-th smallest per query (ties
     and NaN-k-th kept), a superset of any global (d, id) top-k, and the
-    final window is unchanged. Per-pair distances come from the same
-    `np_index_distances` kernel at the same (|q_c|, |b_c|) GEMM shape;
-    query/base row ORDER inside the GEMM differs from the cogroup's
-    shuffle-arrival order, which BLAS answers with last-ulp wobble —
-    exactly the run-to-run wobble the cogroup itself already has (the
-    id sets are pinned by tests, the distances to 1e-5)."""
-    spark = b.sparkSession
-    bc = spark.sparkContext.broadcast((qids, qmat, grouped_q, bounds))
-    dim = qmat.shape[1]
+    final window merges the partial top-k of every task and chunk. The
+    GEMM's row order follows shuffle arrival, so distances may wobble
+    at the last ulp between runs (the id sets are pinned by tests, the
+    distances to 1e-5)."""
 
     def score(batches):
         import pyarrow as pa
@@ -295,44 +320,92 @@ def _broadcast_scored_topk(
             names=[query_id_col, base_id_col, DISTANCE_COL],
         )
 
-    out = (
+    return score
+
+
+def _broadcast_scored_topk(
+    b: DataFrame,
+    base_id_col: str,
+    base_vec_col: str,
+    query_id_col: str,
+    bcs: list,
+    metric: str,
+    k: int,
+    dim: int,
+    n_bins: int,
+) -> DataFrame:
+    """Scoring stage: the base side — already carrying cell + placement
+    token columns — makes its one exchange into `n_bins` LPT-balanced
+    partitions; one `_scorer` pass per broadcast query chunk reads it
+    (Spark plans the exchange once and reuses it for every further
+    chunk), and the chunks' partial top-k union into one per-query
+    window."""
+    schema = (
+        f"{query_id_col} long, {base_id_col} long, {DISTANCE_COL} double"
+    )
+    if not bcs:
+        return b.sparkSession.createDataFrame([], schema)
+    part = (
         b.where(F.col(TOK_COL) >= 0)
         .select(base_id_col, base_vec_col, CELL_COL, TOK_COL)
         .repartition(n_bins, F.col(TOK_COL))
-        .mapInArrow(
-            score,
-            schema=(
-                f"{query_id_col} long, {base_id_col} long, "
-                f"{DISTANCE_COL} double"
-            ),
-        )
     )
+    scored = reduce(DataFrame.unionAll, [
+        part.mapInArrow(
+            _scorer(bc, base_id_col, base_vec_col, query_id_col, metric, k,
+                    dim),
+            schema=schema,
+        )
+        for bc in bcs
+    ])
+    return _window_topk(scored, query_id_col, base_id_col, k)
+
+
+def _exact_scored_topk(q: DataFrame, b: DataFrame, query_id_col: str,
+                       query_vec_col: str, base_id_col: str,
+                       base_vec_col: str, k: int, metric: str) -> DataFrame:
+    """`method='exact'`: both sides arrive carrying `CELL_COL` (queries
+    exploded ×nprobe); equi-join on the cell and score every candidate
+    pair with the bit-exact JVM fold — the oracle path, hash-compared
+    against DuckDB's LATERAL join."""
+    scored = q.join(b, on=CELL_COL).withColumn(
+        DISTANCE_COL,
+        index_distance(
+            metric, base_vec_col, F.col(query_vec_col).cast("array<double>")
+        ),
+    )
+    return _window_topk(scored, query_id_col, base_id_col, k)
+
+
+def _window_topk(scored: DataFrame, query_id_col: str, base_id_col: str,
+                 k: int) -> DataFrame:
+    """Per-query top-k of scored candidates: distance ascending (NaN
+    last), ties on base id ascending."""
     w = Window.partitionBy(query_id_col).orderBy(
         F.col(DISTANCE_COL).asc_nulls_last(), F.col(base_id_col).asc()
     )
     return (
-        out.withColumn("_rn", F.row_number().over(w))
+        scored.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") <= k)
         .select(query_id_col, base_id_col, DISTANCE_COL)
     )
 
 
-def _assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
-                  metric: str, nprobe: int, out_cols: list[str],
-                  tokens: np.ndarray | None = None) -> DataFrame:
-    """Narrow pass: nearest `nprobe` cells per row (exploded).
+def _assign_cells(df: DataFrame, id_col: str, vec_col: str,
+                  centroids: np.ndarray, metric: str, nprobe: int,
+                  tokens: np.ndarray | None = None,
+                  salt: int = 1) -> DataFrame:
+    """Narrow pass → (id, vec, `CELL_COL`): the nearest `nprobe` cells
+    per row (exploded). The vector matrix reshapes zero-copy from the
+    Arrow buffer and the nprobe-fold explosion is one `RecordBatch.take`.
 
-    mapInArrow (round 12, same fix as the IVF build assignment): the
-    vector matrix reshapes zero-copy from the Arrow buffer and the
-    nprobe-fold row explosion is one vectorized `RecordBatch.take`
-    instead of a pandas `.iloc` on an object-Series frame.
-
-    `tokens` (round 16, broadcast scoring path): per-cell placement
-    tokens — when given, an extra long `_tok` column = tokens[cell]
-    rides along so the caller's `repartition(n_bins, _tok)` places each
-    cell in its LPT-chosen partition with zero extra passes."""
+    `tokens`: per-unit placement tokens (`_cell_tokens`); when given, a
+    long `TOK_COL` column (`unit_tokens`) rides along so the caller's
+    `repartition(n_bins, TOK_COL)` places each unit in its LPT-chosen
+    partition with zero extra passes."""
     spark = df.sparkSession
     bc = spark.sparkContext.broadcast((centroids, tokens))
+    out_cols = [id_col, vec_col]
 
     def assign(batches):
         import pyarrow as pa
@@ -359,7 +432,11 @@ def _assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
             extra = [pa.array(flat.astype(np.int32), type=pa.int32())]
             names = [*out_cols, CELL_COL]
             if toks is not None:
-                extra.append(pa.array(toks[flat], type=pa.int64()))
+                ids = taken.column(0).to_numpy(zero_copy_only=False)
+                extra.append(
+                    pa.array(unit_tokens(toks, salt, flat, ids),
+                             type=pa.int64())
+                )
                 names.append(TOK_COL)
             yield pa.RecordBatch.from_arrays(
                 [taken.column(i) for i in range(taken.num_columns)] + extra,
@@ -371,7 +448,7 @@ def _assign_cells(df: DataFrame, vec_col: str, centroids: np.ndarray,
     schema = f"{schema_fields}, {CELL_COL} int"
     if tokens is not None:
         schema += f", {TOK_COL} long"
-    return df.mapInArrow(assign, schema=schema)
+    return df.select(*out_cols).mapInArrow(assign, schema=schema)
 
 
 def knn_join(
@@ -397,28 +474,26 @@ def knn_join(
 
     Exact when `nprobe >= nlist`; otherwise approximate with IVF-probe
     recall characteristics. The DEFAULT (`nlist=0, nprobe=0`) trains
-    auto-sized cells (`ivf.auto_nlist`, the sqrt-N rule) and — round
-    10 — MEASURES the probe→recall curve of those freshly-trained
-    cells on a held-out sample of the base side
+    auto-sized cells (`ivf.auto_nlist`, the sqrt-N rule) and MEASURES
+    the probe→recall curve of those freshly-trained cells on a
+    held-out sample of the base side
     (`calibration.measure_probe_calibration`, the same pass a CREATE
     INDEX runs), probing what THIS data measurably needs instead of
     the static uniform-worst-case `auto_nprobe` guess: on clustered
     real data the static rule over-probes by ~an order of magnitude
-    (bench: measured frac 0.009 vs 0.354 at 100k/clustered), and the
-    fresh-build path is the operator's default face. The measurement
-    is one extra narrow scan of the base side (the join already pays
-    two: train sample + assignment); `calibration_queries=0` skips it
-    and falls back to the static rule, which still holds the
-    reference's 0.70 floor with margin even on uniform vectors
-    (bench-asserted at 100k: `scale100k_knn_join_auto`).
+    (bench: measured frac 0.009 vs 0.354 at 100k/clustered). The
+    measurement is one extra narrow scan of the base side;
+    `calibration_queries=0` skips it and falls back to the static rule,
+    which still holds the reference's 0.70 floor with margin even on
+    uniform vectors (bench-asserted at 100k: `scale100k_knn_join_auto`).
 
-    `target_recall` (round 10, same contract as
-    `index_scan(target_recall=)`): resolve the probe count for THIS
-    call from the freshly measured curve instead of the floor target —
-    requires the measurement (errors loud with `calibration_queries=0`
-    or a degenerate curve), mutually exclusive with an explicit
-    `nprobe`. Cell-level recall: cells are scanned exactly, so the
-    target is end recall modulo the sample noise.
+    `target_recall` (same contract as `index_scan(target_recall=)`):
+    resolve the probe count for THIS call from the freshly measured
+    curve instead of the floor target — requires the measurement
+    (errors loud with `calibration_queries=0` or a degenerate curve),
+    mutually exclusive with an explicit `nprobe`. Cell-level recall:
+    cells are scanned exactly, so the target is end recall modulo the
+    sample noise.
 
     Pinning a small fixed `nprobe` buys latency at UNCHARACTERIZED
     recall (the 100k bench measures 0.264 at nprobe=4/nlist=512) — do
@@ -435,18 +510,17 @@ def knn_join(
     produced it) before returning. Observability only; results don't
     depend on it.
 
-    `salt` handles CELL SKEW on the cogroup fast path — the one shuffle
-    AQE's skew-join cannot split (a whole cell is one task). With
-    salt=s, each base row lands in sub-bucket (cell, hash(id) mod s)
-    and each query replicates to all s sub-buckets of its probed cells,
-    so the largest task is 1/s of the hottest cell by construction; the
-    per-query window merge already unions partial top-k correctly.
-    Exchange cost: base x1 (unchanged), queries x(nprobe*s).
+    `salt` handles CELL SKEW — a whole cell is one scoring unit, which
+    no placement can split. With salt=s, the base rows of every probed
+    cell split over s units by a splitmix64 hash of the id, and each
+    unit scores against its cell's whole probe list from the broadcast,
+    so the largest task holds ~1/s of the hottest cell. Queries are
+    never replicated; the per-query window merges the units' partial
+    top-k. Results do not depend on `salt`.
     """
     spark = base_df.sparkSession
-    # argument-only validation fires BEFORE the count/train/kmeans work
-    # (round-10 review: a bad target_recall must not cost a pass over a
-    # 100M-row base first)
+    # argument-only validation fires BEFORE the count/train/kmeans work:
+    # a bad target_recall must not cost a pass over the base first
     if target_recall is not None:
         if nprobe:
             raise ValueError(
@@ -460,6 +534,7 @@ def knn_join(
                 "target_recall needs the in-call probe measurement — "
                 "don't pass calibration_queries=0 with it"
             )
+    salt = max(1, int(salt))
     if query_vec_col == base_vec_col:
         queries_df = queries_df.withColumnRenamed(
             query_vec_col, f"_q_{query_vec_col}"
@@ -470,10 +545,9 @@ def knn_join(
             query_id_col, f"_q_{query_id_col}"
         )
         query_id_col = f"_q_{query_id_col}"
-    # Arrow-pass dtype normalization (round-13 advice): the assignment
-    # mapInArrow, the applyInArrow cogroup, and the in-call calibration
-    # scan all declare long/array<float> schemas and do not coerce —
-    # cast BOTH sides once here (no-op for already-typed frames)
+    # the Arrow passes (assignment, scoring, the in-call calibration
+    # scan) declare long/array<float> schemas and do not coerce — cast
+    # BOTH sides once here (no-op for already-typed frames)
     from ..functions.distance import cast_id_vec
 
     base_df = cast_id_vec(base_df, base_id_col, base_vec_col)
@@ -490,38 +564,37 @@ def knn_join(
         sample = base_df.where(
             F.pmod(F.abs(F.hash(F.col(base_id_col))), F.lit(modulus)) == 0
         ).select(base_vec_col)
-    # round 16 (guide §1.4-adjacent measurement): `limit(cap)` ran the
-    # incremental CollectLimit (a 1-partition probe job, then the full
-    # scan) — 0.3s vs 0.07s for a plain collect at the bench shape. The
-    # filtered sample is O(cap) rows BY CONSTRUCTION (modulus = n//cap
-    # keeps the expectation in [cap, 2cap); n <= cap collects the whole
-    # base), so collect it all and slice: both spellings traverse
-    # partitions in the same order, so the first `cap` rows — and the
-    # trained centroids — are identical.
+    # the filtered sample is O(cap) rows BY CONSTRUCTION (modulus =
+    # n//cap keeps the expectation in [cap, 2cap); n <= cap collects the
+    # whole base), so collect it all and slice rather than `limit(cap)`,
+    # whose incremental CollectLimit costs a second job. Both spellings
+    # traverse partitions in the same order, so the trained centroids
+    # are identical.
     train = np_stack_vectors(sample.toPandas()[base_vec_col][:cap])
     centroids = _kmeans(train, min(nlist, max(1, len(train))))
     nlist_eff = centroids.shape[0]
+    dim = int(centroids.shape[1])
     measured = False
-    # kick the bounded query-side collect off NOW on a worker thread
-    # (guide §2.6 "overlap independent jobs"): it shares no lineage
-    # with the calibration scan below, and its CollectLimit round
-    # trips hide under the calibration job's wall
-    collect_fut = None
-    pool = None
-    if method != "exact" and salt <= 1:
+    if method != "exact":
+        # run the bounded query-side probe NOW on a worker thread: it
+        # shares no lineage with the calibration scan below, and its
+        # CollectLimit round trips hide under the calibration job's
+        # wall. The thread inherits the caller's job group.
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
+        # without pinned threads this returns the session unchanged
+        inherit = inheritable_thread_target(spark)
         pool = ThreadPoolExecutor(max_workers=1)
-        collect_fut = pool.submit(
-            _collect_queries_bounded, queries_df, query_id_col,
-            query_vec_col, int(centroids.shape[1]),
+        probe = pool.submit(
+            inherit(_probe_queries) if callable(inherit) else _probe_queries,
+            queries_df, query_id_col, query_vec_col, dim,
         )
+        pool.shutdown(wait=False)
     if nprobe == 0 and int(calibration_queries) > 0 and nlist_eff > 1:
-        # nprobe=0 = AUTO (round 10): measure THIS join's freshly
-        # trained cells on a held-out base sample — the same build-time
-        # pass a CREATE INDEX runs — so clustered data gets the small
-        # probe count it actually needs instead of the static
-        # uniform-worst-case rule (see docstring)
+        # nprobe=0 = AUTO: measure THIS join's freshly trained cells on
+        # a held-out base sample (see docstring)
         from ..index.calibration import (
             IVF_TARGET,
             measure_probe_calibration,
@@ -536,8 +609,6 @@ def knn_join(
         if target_recall is not None:
             nprobe = nprobe_for_target({"calibration": cal}, target_recall)
             if nprobe <= 0:
-                if pool is not None:
-                    pool.shutdown(wait=False)
                 raise ValueError(
                     "knn_join: the in-call probe measurement came back "
                     "degenerate (too few rows/cells) — target_recall "
@@ -549,8 +620,6 @@ def knn_join(
             nprobe = int(cal["nprobe"])
             measured = True
     elif target_recall is not None:
-        if pool is not None:
-            pool.shutdown(wait=False)
         raise ValueError(
             "knn_join: target_recall needs >1 trained cell to measure "
             "a curve; drop target_recall and pass an explicit nprobe"
@@ -558,171 +627,40 @@ def knn_join(
     if nprobe == 0:
         # static fallback: calibration disabled or degenerate — the
         # uniform-worst-case rule, same as ivf_nlist=0/nprobe=0 search
-        nprobe = auto_nprobe(nlist_eff, int(centroids.shape[1]))
+        nprobe = auto_nprobe(nlist_eff, dim)
     nprobe = min(max(1, nprobe), nlist_eff)
     if stats is not None:
         stats.update(
             nlist=int(nlist_eff), nprobe=int(nprobe), measured=bool(measured)
         )
 
-    if collect_fut is not None:
-        # broadcast-queries scoring (round 16, guide §8): when the query
-        # side fits the driver cap, ship it (plus the per-cell probe
-        # lists, assigned driver-side with `_assign_cells` arithmetic)
-        # in ONE broadcast — the cogroup exchange carried every query
-        # vector ×nprobe; this path exchanges the base side once into
-        # LPT-balanced bins and only ~nq×k candidate rows afterwards.
-        # An explicit `salt` keeps the cogroup spelling (single-giant-
-        # cell sub-splitting is the one skew LPT placement cannot fix).
-        got = collect_fut.result()
-        pool.shutdown()
-        if got is not None:
-            qids_np, qmat = got
-            grouped_q, bounds = _driver_probe_csr(
-                qmat, centroids, metric, nprobe
-            )
-            # base-side mass estimate per cell from the already-resident
-            # train sample (one driver GEMM — no extra Spark pass)
-            est_b = np.bincount(
-                np.argmin(
-                    np_index_distances(metric, train, centroids), axis=0
-                ),
-                minlength=nlist_eff,
-            ).astype(np.float64)
-            par = max(1, spark.sparkContext.defaultParallelism)
-            tokens, n_bins = _cell_tokens(bounds, est_b, par)
-            b = _assign_cells(
-                base_df.select(base_id_col, base_vec_col), base_vec_col,
-                centroids, metric, 1, [base_id_col, base_vec_col],
-                tokens=tokens,
-            )
-            return _broadcast_scored_topk(
-                b, base_id_col, base_vec_col, query_id_col, qids_np,
-                qmat, grouped_q, bounds, metric, k, n_bins,
-            )
-
-    b = _assign_cells(
-        base_df.select(base_id_col, base_vec_col), base_vec_col, centroids,
-        metric, 1, [base_id_col, base_vec_col],
-    )
-    q = _assign_cells(
-        queries_df.select(query_id_col, query_vec_col), query_vec_col,
-        centroids, metric, nprobe, [query_id_col, query_vec_col],
-    )
-
-    return _cell_scored_topk(
-        q, b, query_id_col, query_vec_col, base_id_col, base_vec_col,
-        k, metric, method, salt,
-    )
-
-
-def _cell_scored_topk(
-    q: DataFrame,
-    b: DataFrame,
-    query_id_col: str,
-    query_vec_col: str,
-    base_id_col: str,
-    base_vec_col: str,
-    k: int,
-    metric: str,
-    method: str,
-    salt: int,
-) -> DataFrame:
-    """Scoring stage shared by `knn_join` (freshly-trained cells) and
-    `index_knn_join` (cells of a published IVF index): both sides arrive
-    already carrying `__cell`; score within cells, merge per-query
-    top-k."""
-    out_schema = (
-        f"{query_id_col} long, {base_id_col} long, {DISTANCE_COL} double"
-    )
     if method == "exact":
-        # bit-exact JVM fold over materialized candidate pairs — the
-        # oracle path (hash-compared against DuckDB's LATERAL join)
-        cand = q.join(b, on=CELL_COL)  # ONLY wide exchange: cell equi-join
-        scored = cand.withColumn(
-            DISTANCE_COL,
-            index_distance(
-                metric, base_vec_col,
-                F.col(query_vec_col).cast("array<double>"),
-            ),
-        )
-    else:
-        # fast path: COGROUP both sides by cell instead of materializing
-        # candidate pairs. The exchange then carries each base row once
-        # and each query row nprobe times — never |q_cell| x |b_cell|
-        # pair rows with two vectors aboard — and each cell scores as
-        # ONE (nq, nb) GEMM + tie-safe partial top-k. Cells are the unit
-        # of parallelism: pick nlist >= cluster parallelism so no single
-        # task owns too much of the corpus.
-
-        def score_cell(qtab, btab):
-            # applyInArrow (round 12, same fix as the scan paths): both
-            # sides' vector matrices reshape zero-copy from the Arrow
-            # buffers instead of round-tripping pandas object Series
-            import pyarrow as pa
-
-            from ..functions.distance import np_from_arrow_list
-
-            empty = pa.table(
-                {query_id_col: pa.array([], type=pa.int64()),
-                 base_id_col: pa.array([], type=pa.int64()),
-                 DISTANCE_COL: pa.array([], type=pa.float64())}
-            )
-            if qtab.num_rows == 0 or btab.num_rows == 0:
-                return empty
-
-            qcol = qtab.column(qtab.schema.get_field_index(query_vec_col))
-            bcol = btab.column(btab.schema.get_field_index(base_vec_col))
-            qdim = len(qcol[0].as_py() or [])
-            bdim = len(bcol[0].as_py() or [])
-            qm = np_from_arrow_list(qcol, qdim)
-            if qm is None:
-                qm = np_stack_vectors(qcol.to_pandas())
-            bm = np_from_arrow_list(bcol, bdim)
-            if bm is None:
-                bm = np_stack_vectors(bcol.to_pandas())
-            d = np_index_distances(metric, bm, qm)  # (nq, nb)
-            kk = min(k, bm.shape[0])
-            qids = qtab.column(
-                qtab.schema.get_field_index(query_id_col)
-            ).to_numpy(zero_copy_only=False)
-            bids = btab.column(
-                btab.schema.get_field_index(base_id_col)
-            ).to_numpy(zero_copy_only=False)
-            frame = np_topk_frame(
-                d, bids, qids, kk, base_id_col,
-                DISTANCE_COL, qidx_col=query_id_col, qidx_dtype=np.int64,
-            )
-            return pa.Table.from_pandas(frame, preserve_index=False)
-
-        salt = max(1, int(salt))
-        if salt > 1:
-            # deterministic sub-split: base by id hash, queries to all
-            # sub-buckets (see docstring; exactness per (cell, salt)
-            # pair is preserved — every (q, b) candidate pair still
-            # meets in exactly one group)
-            b = b.withColumn(
-                "_salt", F.pmod(F.abs(F.hash(F.col(base_id_col))), F.lit(salt))
-            )
-            q = q.withColumn(
-                "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-            )
-            group_cols = [CELL_COL, "_salt"]
-        else:
-            group_cols = [CELL_COL]
-        scored = (
-            q.groupby(*group_cols)
-            .cogroup(b.groupby(*group_cols))
-            .applyInArrow(score_cell, schema=out_schema)
+        return _exact_scored_topk(
+            _assign_cells(queries_df, query_id_col, query_vec_col,
+                          centroids, metric, nprobe),
+            _assign_cells(base_df, base_id_col, base_vec_col, centroids,
+                          metric, 1),
+            query_id_col, query_vec_col, base_id_col, base_vec_col, k,
+            metric,
         )
 
-    w = Window.partitionBy(query_id_col).orderBy(
-        F.col(DISTANCE_COL).asc_nulls_last(), F.col(base_id_col).asc()
+    bcs, q_counts = _broadcast_queries(
+        spark, queries_df, query_id_col, query_vec_col, centroids, metric,
+        nprobe, probe.result(),
     )
-    return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .select(query_id_col, base_id_col, DISTANCE_COL)
+    # base-side mass estimate per cell from the already-resident train
+    # sample (one driver GEMM — no extra Spark pass)
+    est_b = np.bincount(
+        np.argmin(np_index_distances(metric, train, centroids), axis=0),
+        minlength=nlist_eff,
+    ).astype(np.float64)
+    par = max(1, spark.sparkContext.defaultParallelism)
+    tokens, n_bins = _cell_tokens(q_counts, est_b, par, salt)
+    b = _assign_cells(base_df, base_id_col, base_vec_col, centroids, metric,
+                      1, tokens=tokens, salt=salt)
+    return _broadcast_scored_topk(
+        b, base_id_col, base_vec_col, query_id_col, bcs, metric, k, dim,
+        n_bins,
     )
 
 
@@ -742,29 +680,29 @@ def index_knn_join(
     """k-NN join against a PUBLISHED IVFFlat index instead of freshly
     trained cells → (query_id, <index id col>, _distance).
 
-    `target_recall` (round 10, the `index_scan` contract on the join
-    surface): resolve the probe count for THIS call from the index's
-    measured build-time curve — mutually exclusive with an explicit
-    `nprobe`, loud failure on artifacts without a measurement.
+    `target_recall` (the `index_scan` contract on the join surface):
+    resolve the probe count for THIS call from the index's measured
+    build-time curve — mutually exclusive with an explicit `nprobe`,
+    loud failure on artifacts without a measurement.
 
-    `knn_join` pays, on every call, a kmeans train (driver), a full
-    assignment pass over the base side, and the base-side exchange into
-    cells. A table that is joined against repeatedly should pay those
-    once — at CREATE INDEX time. This operator reuses the index
-    artifact the IVF engine already maintains (beyond-reference: the
-    reference's `ann_search_table` streams a query table through one
-    in-process index, `src/ann_search.cpp:397-691`; here the query side
-    is an arbitrary DataFrame and the scoring is distributed):
+    `knn_join` pays, on every call, a kmeans train (driver) and a full
+    assignment pass over the base side. A table that is joined against
+    repeatedly should pay those once — at CREATE INDEX time. This
+    operator reuses the index artifact the IVF engine already maintains
+    (beyond-reference: the reference's `ann_search_table` streams a
+    query table through one in-process index,
+    `src/ann_search.cpp:397-691`; here the query side is an arbitrary
+    DataFrame and the scoring is distributed):
 
     * centroids: the tiny driver-side table (`ivf._centroids`);
     * base side: the cell-PARTITIONED vectors parquet read as-is — no
-      assignment pass, no exchange; pruned to the union of probed cells
-      (partition pruning, same as index search);
-    * query side: one narrow assignment pass to its `nprobe` nearest
-      cells, then the same cogroup-GEMM / exact scoring as `knn_join`.
-      `nprobe=0` resolves exactly like `index_scan` on this index
-      (round 9): the index's own PINNED build nprobe when one was set
-      (reference semantics — FAISS defaults nprobe=1, and the join
+      assignment pass; pruned to the union of probed cells (partition
+      pruning, same as index search);
+    * query side: collected and broadcast in chunks, probe lists
+      computed on the driver, then the same scoring as `knn_join`
+      (`salt` included). `nprobe=0` resolves exactly like `index_scan`
+      on this index: the index's own PINNED build nprobe when one was
+      set (reference semantics — FAISS defaults nprobe=1, and the join
       must score the same cells a search of that index would), else
       the index's measured build-time calibration, else the static
       `auto_nprobe` rule. To force full-probe regardless of the pin,
@@ -776,7 +714,7 @@ def index_knn_join(
     """
     from ..index.api import _deleted_ids, _load
     from ..index.ivf import CELL_COL as IVF_CELL_COL
-    from ..index.ivf import VECTORS_DIR, IvfFlatEngine, auto_nprobe
+    from ..index.ivf import VECTORS_DIR, IvfFlatEngine
 
     cat, manifest, d, impl = _load(index_name, "", catalog)
     if not isinstance(impl, IvfFlatEngine):
@@ -812,9 +750,7 @@ def index_knn_join(
                 "nprobe=0 to measure, or pass an explicit nprobe"
             )
     elif nprobe == 0:
-        # mirror index_scan's resolution exactly (round-9 fix — the old
-        # jump straight to the static rule diverged from index_scan on
-        # indexes with a PINNED build nprobe): the manifest's own
+        # mirror index_scan's resolution exactly: the manifest's own
         # nprobe when pinned > the index's measured floor-clearing
         # count (build-time calibration) > the static worst-case rule
         from ..index.calibration import calibrated_nprobe
@@ -825,6 +761,7 @@ def index_knn_join(
             or auto_nprobe(nlist_eff, int(manifest["dim"]))
         )
     nprobe = min(max(1, nprobe), nlist_eff)
+    salt = max(1, int(salt))
 
     if query_vec_col == base_vec_col:
         queries_df = queries_df.withColumnRenamed(
@@ -836,6 +773,9 @@ def index_knn_join(
             query_id_col, f"_q_{query_id_col}"
         )
         query_id_col = f"_q_{query_id_col}"
+    from ..functions.distance import cast_id_vec
+
+    q = cast_id_vec(queries_df, query_id_col, query_vec_col)
 
     b = spark.read.parquet(f"{d}/{VECTORS_DIR}")
     if IVF_CELL_COL != CELL_COL:  # pragma: no cover - same constant today
@@ -844,68 +784,19 @@ def index_knn_join(
     if deleted is not None:
         b = b.join(F.broadcast(deleted), on=base_id_col, how="anti")
     sq8 = impl._sq8_params(manifest)
-    from ..functions.distance import cast_id_vec
+    dim = int(centroids.shape[1])
 
-    if method != "exact" and salt <= 1:
-        # broadcast-queries scoring (round 16, guide §8 — see knn_join):
-        # the probed-cell union is additionally known driver-side here,
-        # so the partition pruning below costs NO extra Spark job (the
-        # cogroup path re-runs the query assignment pass to collect it)
-        got = _collect_queries_bounded(
-            cast_id_vec(queries_df, query_id_col, query_vec_col),
-            query_id_col, query_vec_col, int(centroids.shape[1]),
+    if method != "exact":
+        bcs, q_counts = _broadcast_queries(
+            spark, q, query_id_col, query_vec_col, centroids, metric,
+            nprobe, _probe_queries(q, query_id_col, query_vec_col, dim),
         )
-        if got is not None:
-            qids_np, qmat = got
-            grouped_q, bounds = _driver_probe_csr(
-                qmat, centroids, metric, nprobe
-            )
-            probed = np.flatnonzero(np.diff(bounds) > 0)
-            bb = b
-            if len(probed) < nlist_eff:
-                # keep the isin prune: it reaches the parquet scan as
-                # partition pruning (the token filter inside the scoring
-                # stage cannot)
-                bb = bb.where(
-                    F.col(CELL_COL).isin([int(c) for c in probed])
-                )
-            if sq8 is not None:
-                from ..index.ivf import _decode_cells_df
-
-                bb = _decode_cells_df(bb, base_id_col, base_vec_col, sq8,
-                                      with_cell=True)
-            par = max(1, spark.sparkContext.defaultParallelism)
-            tokens, n_bins = _cell_tokens(bounds, None, par)
-            bb = _with_tokens(
-                bb.select(base_id_col, base_vec_col, CELL_COL), tokens
-            )
-            return _broadcast_scored_topk(
-                bb, base_id_col, base_vec_col, query_id_col, qids_np,
-                qmat, grouped_q, bounds, metric, k, n_bins,
-            )
-
-    q = _assign_cells(
-        cast_id_vec(queries_df, query_id_col, query_vec_col),
-        query_vec_col, centroids, metric, nprobe,
-        [query_id_col, query_vec_col],
-    )
-    if nprobe < nlist_eff:
-        # partition pruning: only cells some query probes are scanned.
-        # Collecting the distinct probed cells re-runs the (narrow,
-        # cheap) query assignment pass once more — worth it whenever the
-        # base outweighs the query side, which is this operator's use
-        # case: it converts the base-side read+cogroup from ALL cells to
-        # the probed union (a query workload with locality probes far
-        # fewer than nlist cells). The collect is bounded by nlist_eff
-        # ints. Cells probed by nobody would only cogroup against empty
-        # query groups — pruning is a scan optimization, not a
-        # correctness requirement.
-        probed = [
-            int(r[CELL_COL])
-            for r in q.select(CELL_COL).distinct().collect()
-        ]
+        probed = np.flatnonzero(q_counts > 0)
         if len(probed) < nlist_eff:
-            b = b.where(F.col(CELL_COL).isin(probed))
+            # the probed-cell union is known driver-side: the isin
+            # reaches the parquet scan as partition pruning (the token
+            # filter inside the scoring stage cannot)
+            b = b.where(F.col(CELL_COL).isin([int(c) for c in probed]))
     if sq8 is not None:
         # dequantize AFTER the cell pruning so the parquet scan still
         # reads only the probed cells' (1/4-size) code files
@@ -913,7 +804,18 @@ def index_knn_join(
 
         b = _decode_cells_df(b, base_id_col, base_vec_col, sq8,
                              with_cell=True)
-    return _cell_scored_topk(
-        q, b, query_id_col, query_vec_col, base_id_col, base_vec_col,
-        k, metric, method, salt,
+    if method == "exact":
+        return _exact_scored_topk(
+            _assign_cells(q, query_id_col, query_vec_col, centroids, metric,
+                          nprobe),
+            b, query_id_col, query_vec_col, base_id_col, base_vec_col, k,
+            metric,
+        )
+    par = max(1, spark.sparkContext.defaultParallelism)
+    tokens, n_bins = _cell_tokens(q_counts, None, par, salt)
+    b = _with_tokens(b.select(base_id_col, base_vec_col, CELL_COL),
+                     base_id_col, tokens, salt)
+    return _broadcast_scored_topk(
+        b, base_id_col, base_vec_col, query_id_col, bcs, metric, k, dim,
+        n_bins,
     )

@@ -5,6 +5,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_ann_spark.operators import knn_join as kj
 from duckdb_ann_spark.operators.knn_join import knn_join
 
 
@@ -70,14 +71,34 @@ def test_no_cartesian_product(spark, emb):
     assert "BroadcastNestedLoopJoin" not in plan, plan
 
 
+def _force_chunk_rows(monkeypatch, emb, rows):
+    """Shrink the query chunk cap to `rows` query rows of `emb`'s dim."""
+    dim = len(emb.first()["embedding"])
+    monkeypatch.setattr(kj, "QUERY_CHUNK_MB", rows * 4 * dim / 2**20)
+
+
+def _final_plan(df) -> str:
+    """The executed plan after a collect: AQE's final plan only."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return plan.split("== Initial Plan ==")[0]
+
+
+def _exchanges(plan: str, key: str = "") -> tuple[int, int]:
+    """→ (exchanges that run, exchanges reused from another branch),
+    counting only plan nodes whose line contains `key`."""
+    lines = [ln.split("+- ")[-1].lstrip(": ") for ln in plan.splitlines()
+             if key in ln]
+    ran = sum(ln.startswith("Exchange ") for ln in lines)
+    return ran, sum(ln.startswith("ReusedExchange ") for ln in lines)
+
+
 def test_blas_path_never_materializes_pairs(spark, emb, monkeypatch):
-    """Fast-path plan shapes. Default (round 16): the broadcast-queries
-    spelling — scan → MapInArrow scoring with exactly TWO exchanges
-    (the token-placed base gather + the window merge), the query side
-    never on the wire, and no join operator. Cogroup fallback (cap
-    disabled): the round-12 shape — one exchange per side keyed on cell
-    + FlatMapCoGroupsInArrow + the window merge, three exchanges. Either
-    way, a pair-materializing join (|q_cell| × |b_cell| vector rows on
+    """Fast-path plan shapes. One query chunk: scan → MapInArrow scoring
+    with exactly TWO exchanges (the token-placed base gather + the
+    window merge), the query side never on the wire, and no join
+    operator. Several chunks: one scoring branch per chunk, all reading
+    ONE base exchange (the others reuse it) — still two exchanges that
+    run. A pair-materializing join (|q_cell| × |b_cell| vector rows on
     the wire) must never appear."""
     queries = emb.where(F.col("vec_id") < 10)
 
@@ -93,11 +114,14 @@ def test_blas_path_never_materializes_pairs(spark, emb, monkeypatch):
     assert "Join" not in plan, plan
     assert plan.count("Exchange") == 2, plan
 
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
-    plan = mk()._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan, plan
+    _force_chunk_rows(monkeypatch, emb, 3)  # 10 queries -> 4 chunks
+    df = mk()
+    assert len(df.collect()) == 10 * 2
+    plan = _final_plan(df)
+    assert plan.count("MapInArrow score") == 4, plan
+    assert "CoGroup" not in plan, plan
     assert "Join" not in plan, plan
-    assert plan.count("Exchange") == 3, plan
+    assert _exchanges(plan) == (2, 3), plan
 
 
 def test_exact_method_matches_blas_ids(spark, emb):
@@ -116,19 +140,25 @@ def test_exact_method_matches_blas_ids(spark, emb):
 
 
 def test_salted_cogroup_matches_unsalted(spark, emb):
-    """salt=s splits each cell into s cogroup tasks without changing
-    results: every (query, base) candidate pair still meets in exactly
-    one (cell, salt) group and the window merge unions partial top-k."""
+    """salt=s splits each probed cell's base rows over s scoring units
+    without changing results: every base row lands in exactly one unit,
+    each unit scores against its cell's whole probe list, and the window
+    merge unions partial top-k. The salted plan stays on the broadcast
+    scorer — no co-grouped exchange of the query side."""
     queries = emb.where(F.col("vec_id") < 25)
     kw = dict(k=3, nlist=8, nprobe=3)
     plain = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
                      "embedding", **kw).collect()
-    salted = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
-                      "embedding", salt=4, **kw).collect()
+    salted_df = knn_join(queries, "vec_id", "embedding", emb, "vec_id",
+                         "embedding", salt=4, **kw)
+    salted = salted_df.collect()
     key = lambda rows: sorted(
         (r["_q_vec_id"], r["vec_id"], round(r["_distance"], 6)) for r in rows
     )
     assert key(plain) == key(salted)
+    plan = _final_plan(salted_df)
+    assert "FlatMapCoGroupsInArrow" not in plan, plan
+    assert "MapInArrow score" in plan, plan
 
 
 def test_knn_join_auto_nlist(spark, sf_dir):
@@ -385,13 +415,13 @@ def test_index_knn_join_target_recall(spark, clustered, tmp_path):
     drop_index("ikj_pin", cat)
 
 
-def test_broadcast_path_matches_cogroup(spark, emb, monkeypatch):
-    """Round-16 broadcast-queries scoring vs the cogroup spelling: the
+def test_broadcast_path_matches_cogroup(spark, emb):
+    """Broadcast scoring vs the `method='exact'` equi-join at the same
+    (nlist, nprobe): the driver-side probe lists are bit-identical to
+    the distributed assignment pass (`_driver_probe_csr`), so the
     (query, base) id sets must be identical and the distances equal to
-    BLAS ulp wobble (the cogroup's own shuffle-arrival row order already
-    wobbles the GEMM at the last ulp — per-pair values are not
-    bit-pinned on either spelling). Covers partial probe, k larger than
-    a cell, and all three metrics."""
+    the f32 GEMM's rounding. Covers partial probe, k larger than a cell,
+    and all three metrics."""
     queries = emb.where(F.col("vec_id") < 25)
 
     def run(**kw):
@@ -405,10 +435,9 @@ def test_broadcast_path_matches_cogroup(spark, emb, monkeypatch):
 
     for metric in ("l2", "ip", "cosine"):
         for k, nlist, nprobe in ((3, 8, 3), (40, 16, 16)):
-            monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
             a = run(metric=metric, k=k, nlist=nlist, nprobe=nprobe)
-            monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
-            b = run(metric=metric, k=k, nlist=nlist, nprobe=nprobe)
+            b = run(metric=metric, k=k, nlist=nlist, nprobe=nprobe,
+                    method="exact")
             assert [(x[0], x[1]) for x in a] == [(x[0], x[1]) for x in b], (
                 metric, k)
             assert np.allclose(
@@ -416,33 +445,59 @@ def test_broadcast_path_matches_cogroup(spark, emb, monkeypatch):
             ), (metric, k)
 
 
-def test_broadcast_path_falls_back_over_cap(spark, emb, monkeypatch):
-    """A query side over the byte cap must take the cogroup spelling
-    (bounded collect, no driver blow-up) and produce the same ids."""
+def test_broadcast_path_falls_back_over_cap(spark, emb, ivf_cat,
+                                            monkeypatch):
+    """A query side over the chunk cap is collected and broadcast in
+    chunks of at most the cap: the ids equal the one-chunk call, for
+    `knn_join` and for `index_knn_join` over tombstones. Every chunk's
+    scoring branch reads the one base exchange (reused, not re-run),
+    and nothing co-groups or joins the query side."""
+    from duckdb_ann_spark.index import create_index, delete_from_index
+    from duckdb_ann_spark.operators.knn_join import index_knn_join
+
     queries = emb.where(F.col("vec_id") < 25)
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0.0001")
-    df = knn_join(
-        queries, "vec_id", "embedding", emb, "vec_id", "embedding",
-        k=2, nlist=8, nprobe=2,
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "FlatMapCoGroupsInArrow" in plan, plan
-    a = sorted((r["_q_vec_id"], r["vec_id"]) for r in df.collect())
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
-    b = sorted(
-        (r["_q_vec_id"], r["vec_id"])
-        for r in knn_join(
+    create_index(emb, "vec_id", "embedding", "kjc_idx", engine="faiss",
+                 type="IVFFlat", ivf_nlist=8, nprobe=3, catalog=ivf_cat)
+    delete_from_index(spark, "kjc_idx", [3, 7], catalog=ivf_cat)
+    calls = {
+        "knn_join": lambda: knn_join(
             queries, "vec_id", "embedding", emb, "vec_id", "embedding",
             k=2, nlist=8, nprobe=2,
-        ).collect()
-    )
-    assert a == b
+        ),
+        "index_knn_join": lambda: index_knn_join(
+            spark, "kjc_idx", queries, "vec_id", "embedding", k=2,
+            catalog=ivf_cat,
+        ),
+    }
+    one = {
+        name: sorted((r["_q_vec_id"], r["vec_id"]) for r in mk().collect())
+        for name, mk in calls.items()
+    }
+    _force_chunk_rows(monkeypatch, emb, 8)  # 25 queries -> >= 4 chunks
+    for name, mk in calls.items():
+        df = mk()
+        got = sorted((r["_q_vec_id"], r["vec_id"]) for r in df.collect())
+        assert got == one[name], name
+        assert len(got) == 25 * 2, name
+        plan = _final_plan(df)
+        chunks = plan.count("MapInArrow score")
+        assert chunks >= 3, (name, plan)
+        assert "CoGroup" not in plan, (name, plan)
+        # the only join is index_knn_join's broadcast tombstone anti-join
+        joins = [ln for ln in plan.splitlines() if "Join" in ln]
+        assert all("BroadcastHashJoin" in ln and "LeftAnti" in ln
+                   for ln in joins), (name, plan)
+        if name == "knn_join":
+            assert not joins, plan
+        # one base exchange runs; every further chunk reuses it
+        assert _exchanges(plan, "__tok") == (1, chunks - 1), plan
+    assert not any(bid in (3, 7) for _, bid in one["index_knn_join"])
 
 
-def test_index_broadcast_path_matches_cogroup(spark, emb, ivf_cat,
-                                              monkeypatch):
-    """index_knn_join parity across the two spellings, including the
-    tombstone anti-join riding in front of the broadcast scoring."""
+def test_index_broadcast_path_matches_cogroup(spark, emb, ivf_cat):
+    """index_knn_join broadcast scoring vs `method='exact'` at the
+    index's own nprobe, including the tombstone anti-join riding in
+    front of the scoring."""
     from duckdb_ann_spark.index import create_index, delete_from_index
     from duckdb_ann_spark.operators.knn_join import index_knn_join
 
@@ -453,36 +508,34 @@ def test_index_broadcast_path_matches_cogroup(spark, emb, ivf_cat,
         F.col("vec_id").alias("qid"), "embedding"
     )
 
-    def run():
+    def run(**kw):
         return sorted(
             (r["qid"], r["vec_id"])
             for r in index_knn_join(
                 spark, "kjb_idx", queries, "qid", "embedding", k=4,
-                catalog=ivf_cat,
+                catalog=ivf_cat, **kw,
             ).collect()
         )
 
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "64")
     a = run()
-    monkeypatch.setenv("SPARK_GRAFT_KNN_BCAST_MB", "0")
-    b = run()
+    b = run(method="exact")
     assert a == b
     assert not any(bid in (3, 7) for _, bid in a)
 
 
 def test_lpt_bins_balance_and_zero_mass():
     """LPT packs heaviest-first into the lightest bin; zero-estimate
-    cells round-robin instead of piling into bin 0 (r15 ADVICE)."""
-    from duckdb_ann_spark.operators.knn_join import _lpt_bins
+    cells round-robin instead of piling into bin 0."""
+    from duckdb_ann_spark.functions.partitioning import lpt_bins
 
     mass = np.array([100.0, 90.0, 10.0, 10.0, 0.0, 0.0, 0.0, 0.0])
-    bins = _lpt_bins(mass, 2)
+    bins = lpt_bins(mass, 2)
     loads = [np.maximum(mass, 1.0)[bins == b].sum() for b in (0, 1)]
     assert abs(loads[0] - loads[1]) <= np.maximum(mass, 1.0).max(), loads
     # the ADVICE scenario: ALL cells zero-estimate — without the unit
     # epsilon every (0.0 + 0.0) push kept bin 0 the heap minimum and
     # the whole set piled into one task
-    bins0 = _lpt_bins(np.zeros(16), 4)
+    bins0 = lpt_bins(np.zeros(16), 4)
     counts = np.bincount(bins0, minlength=4)
     assert counts.max() == 4, counts
 
@@ -495,8 +548,120 @@ def test_cell_tokens_prune_and_place():
 
     # 6 cells, cells 1 and 4 unprobed
     bounds = np.array([0, 2, 2, 5, 9, 9, 12])
-    tokens, n_bins = _cell_tokens(bounds, None, par=2)
+    tokens, n_bins = _cell_tokens(np.diff(bounds), None, par=2)
     assert tokens[1] == -1 and tokens[4] == -1
     probed = [0, 2, 3, 5]
     parts = {murmur3_hash_int(int(tokens[c])) % n_bins for c in probed}
     assert len(parts) == min(len(probed), n_bins)
+    # salt=3: unit cell*3 + sub; both unprobed cells keep all units
+    # pruned, and the 12 probed units spread over 2×par distinct bins
+    tokens, n_bins = _cell_tokens(np.diff(bounds), None, par=2, salt=3)
+    assert tokens.shape == (18,) and n_bins == 4
+    assert (tokens.reshape(6, 3)[[1, 4]] == -1).all()
+    units = tokens.reshape(6, 3)[probed].ravel()
+    assert {murmur3_hash_int(int(t)) % n_bins for t in units} == set(
+        range(n_bins))
+    # one cell's rows spread evenly over its 3 units by the id mixer
+    from duckdb_ann_spark.functions.partitioning import unit_tokens
+
+    t = unit_tokens(np.arange(18), 3, np.full(3000, 2), np.arange(3000))
+    assert set(t.tolist()) == {6, 7, 8}
+    assert np.bincount(t)[6:].min() > 900, np.bincount(t)
+
+
+def test_empty_query_side_returns_typed_empty_frame(spark, emb, ivf_cat):
+    """No query rows → 0 result rows with the (query id, base id,
+    _distance) schema, from both join surfaces."""
+    from duckdb_ann_spark.index import create_index
+    from duckdb_ann_spark.operators.knn_join import index_knn_join
+
+    create_index(emb, "vec_id", "embedding", "kje_idx", engine="faiss",
+                 type="IVFFlat", ivf_nlist=8, nprobe=2, catalog=ivf_cat)
+    none = emb.where(F.col("vec_id") < 0).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    for df in (
+        knn_join(none, "qid", "embedding", emb, "vec_id", "embedding",
+                 k=3, nlist=8, nprobe=2),
+        index_knn_join(spark, "kje_idx", none, "qid", "embedding", k=3,
+                       catalog=ivf_cat),
+    ):
+        assert df.collect() == []
+        assert [(f.name, f.dataType.simpleString())
+                for f in df.schema.fields] == [
+            ("qid", "bigint"), ("vec_id", "bigint"), ("_distance", "double")
+        ]
+
+
+def test_k_larger_than_base_returns_every_row(spark):
+    """k > n: each query gets min(k, n) rows — every base row, ranked."""
+    rng = np.random.default_rng(3)
+    mat = rng.random((12, 4), dtype=np.float32)
+    base = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in enumerate(mat)],
+        "vec_id long, embedding array<float>",
+    )
+    q = base.where(F.col("vec_id") < 5).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    for salt in (1, 3):
+        got = knn_join(q, "qid", "embedding", base, "vec_id", "embedding",
+                       k=50, nlist=3, nprobe=3, n_rows=12, salt=salt,
+                       calibration_queries=0).collect()
+        want = _brute_1nn(mat[:5], np.arange(5), mat, np.arange(12), 50)
+        by_q: dict = {}
+        for r in sorted(got, key=lambda r: (r["_distance"], r["vec_id"])):
+            by_q.setdefault(r["qid"], []).append(r["vec_id"])
+        assert by_q == {q_: [w[0] for w in ws] for q_, ws in want.items()}
+
+
+def test_knn_join_jobs_per_call(spark, emb, monkeypatch):
+    """Jobs per call at a fixed nlist/nprobe, no calibration, n_rows
+    given: one chunk = the train-sample collect, the query probe, the
+    base exchange, the window exchange and the result (5). Over the
+    cap, the bucket count (2 jobs) and one collect per chunk add on;
+    the reused base exchange adds none (4 chunks → 11)."""
+    queries = emb.where(F.col("vec_id") < 25)
+    sc = spark.sparkContext
+
+    def jobs(group):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            rows = knn_join(
+                queries, "vec_id", "embedding", emb, "vec_id", "embedding",
+                k=2, nlist=8, nprobe=2, n_rows=500, calibration_queries=0,
+            ).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert len(rows) == 25 * 2
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("knn_jobs_one_chunk") == 5
+    _force_chunk_rows(monkeypatch, emb, 8)  # 25 queries -> 4 chunks
+    assert jobs("knn_jobs_four_chunks") == 11
+
+
+def test_driver_holds_one_query_chunk_at_a_time(spark, emb, monkeypatch):
+    """Over the cap, each chunk's query matrix is released before the
+    next chunk is collected, so the driver holds one chunk at a time."""
+    import weakref
+
+    refs: list = []
+    live_at_collect: list = []
+    real = kj._np_queries
+
+    def spy(*args):
+        live_at_collect.append(sum(r() is not None for r in refs))
+        out = real(*args)
+        refs.append(weakref.ref(out[1]))
+        return out
+
+    monkeypatch.setattr(kj, "_np_queries", spy)
+    _force_chunk_rows(monkeypatch, emb, 8)  # 25 queries -> 4 chunks
+    rows = knn_join(
+        emb.where(F.col("vec_id") < 25), "vec_id", "embedding", emb,
+        "vec_id", "embedding", k=2, nlist=8, nprobe=2,
+    ).collect()
+    assert len(rows) == 25 * 2
+    assert len(refs) == 4
+    assert live_at_collect == [0, 0, 0, 0]

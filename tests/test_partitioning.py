@@ -50,3 +50,19 @@ def test_repartition_places_one_cell_per_partition(spark):
         .collect()
     )
     assert all(r["p"] == r["cell"] for r in rows)
+
+
+def test_mix64_np_matches_scalar_mixer():
+    """The vectorized splitmix64 that places Vamana sub-shards and
+    knn_join salt units is bit-identical to the scalar mixer behind
+    entry-point sampling and HNSW levels, including ids that wrap."""
+    import numpy as np
+
+    from duckdb_ann_spark.functions.partitioning import mix64_np
+    from duckdb_ann_spark.index.vamana_core import _mix64
+
+    ids = np.array([0, 1, 2, 12345, 2**40 + 7, -1, -(2**63)], dtype=np.int64)
+    got = mix64_np(ids.astype(np.uint64))
+    assert [int(v) for v in got] == [
+        _mix64(int(i) & ((1 << 64) - 1)) for i in ids
+    ]
