@@ -352,6 +352,40 @@ def np_index_distances(metric: str, mat: np.ndarray, queries: np.ndarray) -> np.
     raise ValueError(f"Unknown metric '{metric}'. Supported: {', '.join(METRICS)}")
 
 
+# Distance-matrix elements per block when `nearest_cells` picks each
+# row's probe cells.
+PROBE_ELEMS = 1 << 22
+
+
+def nearest_cells(metric: str, mat: np.ndarray, centroids: np.ndarray,
+                  nprobe: int) -> np.ndarray:
+    """→ (nprobe, n) int64: each row's `nprobe` nearest centroids,
+    nearest first, ties to the lower index, NaN last — exactly
+    `np.argsort(d, axis=0, kind="stable")[:nprobe]` of the distance
+    matrix d, but found by a partial partition, one block of rows at a
+    time so the (nlist, rows) distance and index matrices stay within
+    `PROBE_ELEMS` elements."""
+    nlist = centroids.shape[0]
+    rows = max(1, PROBE_ELEMS // max(1, nlist))
+    out = [np.empty((min(nprobe, nlist), 0), dtype=np.int64)]
+    for s in range(0, len(mat), rows):
+        d = np_index_distances(metric, mat[s:s + rows], centroids)
+        if nprobe >= nlist:
+            out.append(np.argsort(d, axis=0, kind="stable"))
+            continue
+        top = np.argpartition(d, nprobe - 1, axis=0)[:nprobe]
+        dt = np.take_along_axis(d, top, axis=0)
+        top = np.take_along_axis(top, np.lexsort((top, dt), axis=0), axis=0)
+        # the partition holds the stable sort's set unless the k-th
+        # distance ties past it or is NaN: those rows sort in full
+        full = np.flatnonzero((d <= dt.max(axis=0)).sum(axis=0) != nprobe)
+        if len(full):
+            top[:, full] = np.argsort(d[:, full], axis=0,
+                                      kind="stable")[:nprobe]
+        out.append(top)
+    return np.concatenate(out, axis=1)
+
+
 def np_paired_distances(metric: str, mat: np.ndarray, qrows: np.ndarray) -> np.ndarray:
     """Row-paired distances: mat[i] vs qrows[i] (same shape), one einsum
     kernel per metric. The single shared implementation for every

@@ -7,9 +7,11 @@ Golden values from `/root/reference/test/sql/diskann_basic.test:27-34`
 
 import math
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from duckdb_ann_spark.functions import distance
 from duckdb_ann_spark.functions.distance import (
     array_distance,
     cosine_distance,
@@ -17,6 +19,7 @@ from duckdb_ann_spark.functions.distance import (
     index_distance,
     inner_product,
     l2sq_distance,
+    nearest_cells,
     neg_inner_product,
     np_index_distances,
 )
@@ -154,3 +157,23 @@ def test_oracle_fold_edge_cases_match_spark(spark):
         else:
             assert got[i] == want[i], (i, got[i], want[i])
     assert got[1] == 0.0 and got[0] is None
+
+
+def test_nearest_cells_equals_stable_argsort(monkeypatch):
+    """The partition-based nearest-centroid pick equals the stable full
+    sort — order, ties to the lower index, NaN (cosine zero vectors)
+    last — in one block and across blocks."""
+    rng = np.random.default_rng(5)
+    mat = rng.integers(0, 3, (700, 4)).astype(np.float32)  # many ties
+    cent = rng.integers(0, 3, (12, 4)).astype(np.float32)
+    mat[:7] = 0.0
+    cent[3] = 0.0
+    for elems in (1 << 22, 50):  # one block; 4-row blocks
+        monkeypatch.setattr(distance, "PROBE_ELEMS", elems)
+        for metric in ("l2", "ip", "cosine"):
+            d = np_index_distances(metric, mat, cent)
+            for nprobe in (1, 2, 5, 12):
+                want = np.argsort(d, axis=0, kind="stable")[:nprobe]
+                got = nearest_cells(metric, mat, cent, nprobe)
+                assert got.shape == want.shape
+                assert (got == want).all(), (elems, metric, nprobe)

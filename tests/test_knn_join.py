@@ -246,6 +246,33 @@ def test_index_knn_join_partial_probe_prunes_and_recalls(spark, emb, ivf_cat):
     assert len(self_hits) == 30 and (self_hits._distance < 1e-5).all()
 
 
+def test_index_knn_join_prunes_unprobed_cells(spark, emb, ivf_cat):
+    """Partial probe, both methods: the parquet scan of the index's
+    cell-partitioned vectors reads only the cells some query probes
+    (an `IN` partition filter on the cell column), and the pruned call
+    returns what the full-probe scoring of the same probe sets does."""
+    from duckdb_ann_spark.index import create_index
+    from duckdb_ann_spark.operators.knn_join import index_knn_join
+
+    create_index(emb, "vec_id", "embedding", "ikpr", engine="faiss",
+                 type="IVFFlat", ivf_nlist=16, nprobe=2, catalog=ivf_cat)
+    q = emb.where(F.col("vec_id") < 3).select(
+        F.col("vec_id").alias("qid"), "embedding"
+    )
+    got = {}
+    for method in ("blas", "exact"):
+        df = index_knn_join(spark, "ikpr", q, "qid", "embedding", k=2,
+                            method=method, catalog=ivf_cat)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        filters = [seg.split("]")[0]
+                   for seg in plan.split("PartitionFilters: [")[1:]]
+        assert any(f"{kj.CELL_COL}" in f and " IN (" in f
+                   for f in filters), (method, plan)
+        got[method] = sorted((r["qid"], r["vec_id"]) for r in df.collect())
+    assert got["blas"] == got["exact"]
+    assert len(got["exact"]) == 3 * 2
+
+
 def test_index_knn_join_respects_tombstones(spark, emb, ivf_cat):
     from duckdb_ann_spark.index import create_index, delete_from_index
     from duckdb_ann_spark.operators.knn_join import index_knn_join
@@ -643,7 +670,9 @@ def test_knn_join_jobs_per_call(spark, emb, monkeypatch):
 
 def test_driver_holds_one_query_chunk_at_a_time(spark, emb, monkeypatch):
     """Over the cap, each chunk's query matrix is released before the
-    next chunk is collected, so the driver holds one chunk at a time."""
+    next chunk is collected, so the driver's Python process holds one
+    chunk at a time. (Spark's block manager keeps every chunk's
+    broadcast; this test does not see that store.)"""
     import weakref
 
     refs: list = []
